@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.hadoop.fs.Path
+import scala.util.Try
 
 /** Loaders for the driver-generated parquet test tables (TESTDATA.md). */
 object Tables {
@@ -51,9 +53,29 @@ object Tables {
     // this harness's case); object-store deployments should leave the
     // default.
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    // JVM-wide cache of Janino-compiled classes (static: read once, when
+    // the first plan compiles). Spark's default of 100 is below one curate
+    // pass's working set (107 classes for the three curate keys plus the
+    // sketch steps at sf0.01), and an LRU cache smaller than a cyclic
+    // working set misses on nearly every access: each warm pass
+    // recompiled 55-72 classes, ~1 s of a ~4.5 s pass. Running the whole
+    // SparkEntry.queries registry (227 keys) in one JVM generates 3138
+    // distinct classes (94 more on a second round); the bound covers that
+    // with headroom, so repeated traffic over the registry's plan shapes
+    // compiles each shape once. Memory: the benchmark's curate
+    // heap_live_mb (old generation after a full GC, 4-core VM, 20 runs
+    // per side) read a median of 126.8 MB at the default and 136.0 MB
+    // with this bound. Both sides are bimodal (~127 or ~184 MB), this
+    // bound landing in the upper mode in 9 of 20 runs against 3 of 20,
+    // so the difference is not resolved from noise.
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val raw = inferredSchema(spark, path)
+      .map(spark.read.schema(_).parquet(path))
+      .getOrElse(spark.read.parquet(path))
     if (name == "events") {
       // events.ts has shipped in two physical shapes across testdata
       // generations: TIMESTAMP(NANOS) — which Spark's parquet reader only
@@ -64,10 +86,36 @@ object Tables {
       // loaded schema instead of assuming either shape; every downstream
       // consumer sees a session-TZ TimestampType `ts` at micro precision
       // either way.
-      normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-    } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    }
+      normalizeEventTs(raw)
+    } else raw
+  }
+
+  /** Parquet schema inference is a Spark job (footer reads fanned out by
+    * `mergeSchemasInParallel`) — paid on EVERY plain `spark.read.parquet`,
+    * although a table directory's schema only changes when its files do.
+    * The key is the directory's file listing (path, length, mtime per
+    * file) plus every session conf that changes what inference returns,
+    * so a rewritten directory or a flipped conf re-infers. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+  private val schemaCache =
+    new graft.ops.LruCache[(Seq[(String, Long, Long)], Seq[Option[String]]), StructType](256)
+
+  /** None when the path cannot be listed: the caller's plain read then
+    * raises Spark's own error for it. */
+  private def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
+    Try {
+      val p = new Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      (files, InferenceConfs.map(spark.conf.getOption))
+    }.toOption.map(key => schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema))
 
   /** normalize the physically-varying events `ts` column to a session-TZ
     * TimestampType at micro precision — shared by the batch loader above

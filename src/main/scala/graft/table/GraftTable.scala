@@ -38,6 +38,17 @@ object Dv {
   }
 }
 
+/** Fixed physical schemas of the overlay files GraftTable writes: position
+  * deletes (MoR delete/update, rewriteDeleteFiles) and deletion vectors.
+  * Reads declare them — schema inference would cost a Spark job per
+  * overlay file per scan. */
+object DeleteFiles {
+  val PosSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+  val DvSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("dv", BinaryType)))
+}
+
 object WriteMode extends Enumeration {
   val CopyOnWrite, MergeOnRead, DeletionVector = Value
 }
@@ -111,6 +122,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
   private def abs(rel: String): String =
     if (rel.startsWith("/")) rel else s"$location/$rel"
+  /** read a position-delete or DV file with its declared schema */
+  private def readOverlay(f: FileMeta): DataFrame = spark.read
+    .schema(if (f.fileType == "dv") DeleteFiles.DvSchema else DeleteFiles.PosSchema)
+    .parquet(abs(f.path))
 
   // ==========================================================================
   // Scan
@@ -237,13 +252,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // Stored targets pass through canonTargets so legacy URI-encoded
     // values (pre-round-15 writers) keep applying after the raw-path move.
     val livePaths = dataFiles.map(f => normPath(abs(f.path)))
-    val posPart = posDel.map(f => canonTargets(
-      spark.read.parquet(abs(f.path)).select("file_path", "pos"), livePaths))
+    val posPart = posDel.map(f => canonTargets(readOverlay(f), livePaths))
     val dvPart = if (dvs.isEmpty) None else Some {
       // canonicalize BEFORE the latest-per-file window so a legacy and a
       // raw encoding of the same target land in one window partition
-      val raw = canonTargets(dvs.map(f => spark.read.parquet(abs(f.path))
-        .select(col("file_path"), col("dv"), lit(f.sequenceNumber).as("_dseq")))
+      val raw = canonTargets(dvs.map(f => readOverlay(f)
+        .withColumn("_dseq", lit(f.sequenceNumber)))
         .reduce(_ unionByName _), livePaths)
       val w = Window.partitionBy(col("file_path"))
       val latest = raw.withColumn("_mx", max(col("_dseq")).over(w))
@@ -331,7 +345,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
       .orElse(m.properties.get("write.target-partitions").map(_.toInt))
     if (pcols.nonEmpty) {
       val pRefs = spec.fields.map(pf => col(s"_p_${pf.name}"))
-      out = out.repartition(pRefs: _*)
+      // an explicit count keeps AQE from coalescing a small write into ONE
+      // task that writes every partition's file serially; each partition
+      // value still hashes to exactly one task, so file counts are unchanged
+      val n = math.min(spark.sessionState.conf.numShufflePartitions,
+        spark.sparkContext.defaultParallelism)
+      out = out.repartition(n, pRefs: _*)
       // with a partition spec, clustering properties apply WITHIN partitions
       // (z-order wins over a linear sort when both are set). The sort must
       // LEAD with the partition columns: the parquet writer requires rows
@@ -793,8 +812,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
             x.toByteArray
           })
         val old = if (existing.isEmpty) None else Some {
-          val raw = existing.map(f => spark.read.parquet(abs(f.path))
-              .select(col("file_path"), col("dv"), lit(f.sequenceNumber).as("_dseq")))
+          val raw = existing.map(f => readOverlay(f)
+              .withColumn("_dseq", lit(f.sequenceNumber)))
             .reduce(_ unionByName _)
           val w = Window.partitionBy(col("file_path"))
           raw.withColumn("_mx", max(col("_dseq")).over(w))
@@ -1499,7 +1518,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // URI-encoded value is tolerated via its decoded form — over-inclusion
     // only widens the scan, never changes the join's answer.
     val touched = fileScoped.iterator.flatMap { e =>
-      spark.read.parquet(abs(e.path)).select("file_path").distinct()
+      readOverlay(e).select("file_path").distinct()
         .collect().iterator.map(_.getString(0))
         .flatMap { t =>
           val dec = try java.net.URLDecoder.decode(
@@ -1716,9 +1735,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // canonTargets BEFORE the distinct: a legacy URI-encoded target and
     // its raw form merge into ONE canonical row, and the rewritten file
     // persists raw paths — this rewrite is the legacy-table migration
-    val merged = canonTargets(pds.map(f => spark.read.parquet(abs(f.path))
-        .select(col("file_path"), col("pos")))
-      .reduce(_ unionByName _), liveData)
+    val merged = canonTargets(pds.map(readOverlay).reduce(_ unionByName _), liveData)
       .distinct()
       .join(broadcast(liveDf),
         normCol(col("file_path")) === col("live_path"), "left_semi")

@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 
 /** Driver-side manifest pruning: decide the file list from per-file
   * partition values and column min/max stats BEFORE any Spark job runs —
@@ -60,6 +60,13 @@ object Pruning {
       case GreaterThanOrEqual(a, b) => cmpPred(a, b, ">=", "<=")
       case In(a, ls) if ls.forall(lit(_).isDefined) =>
         attr(a).map(f => Pred(f, "in", ls.flatMap(lit)))
+      // `k BETWEEN a AND b` parses to an unresolved `between(k, a, b)`
+      // call, not the >=/<= pair it means; NOT BETWEEN arrives wrapped in
+      // Not and stays unextracted
+      case UnresolvedFunction(Seq(n), Seq(a, lo, hi), false, None, false, _, _)
+          if n.equalsIgnoreCase("between") =>
+        (for (f <- attr(a); l <- lit(lo); h <- lit(hi))
+          yield Seq(Pred(f, ">=", Seq(l)), Pred(f, "<=", Seq(h)))).getOrElse(Nil)
       case _ => None
     }
   }

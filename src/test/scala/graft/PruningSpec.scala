@@ -28,6 +28,21 @@ class PruningSpec extends SparkSpec {
     assert(ps.size == 4)
   }
 
+  test("BETWEEN extracts as >= and <= on a bare column; NOT BETWEEN stays unextracted") {
+    val ps = Pruning.extract("k BETWEEN 5 AND 9", spark)
+    assert(ps.map(p => (p.field, p.op, p.values)).toSet ==
+      Set(("k", ">=", Seq(5)), ("k", "<=", Seq(9))))
+    assert(Pruning.extract("k NOT BETWEEN 5 AND 9", spark).isEmpty)
+    // non-literal bound or qualified column: nothing to prune on
+    assert(Pruning.extract("k BETWEEN price AND 9", spark).isEmpty)
+    assert(Pruning.extract("t.k BETWEEN 5 AND 9", spark).isEmpty)
+    val f = file(Map("1" -> ColStats(Some("100"), Some("200"), 0)))
+    def keep(p: String) = Pruning.fileMatches(f, meta(), Pruning.extract(p, spark))
+    assert(!keep("k BETWEEN 201 AND 300") && !keep("k BETWEEN 1 AND 99"))
+    assert(keep("k BETWEEN 150 AND 160") && keep("k BETWEEN 1 AND 100"))
+    assert(keep("k NOT BETWEEN 1 AND 300"))
+  }
+
   test("numeric min/max stats decide ranges; missing stats keep the file") {
     val m = meta()
     val f = file(Map("1" -> ColStats(Some("100"), Some("200"), 0)))

@@ -443,6 +443,29 @@ class TableSpec extends SparkSpec {
     assert(t.scan().collect().map(_.toSeq).toSet == before)
   }
 
+  test("scan over position-delete and DV overlays plans without a Spark job") {
+    val t = mkOrders(tmp())
+    t.append(seedDf(seed))
+    t.delete("o_orderkey = 1", WriteMode.MergeOnRead)
+    t.delete("o_orderkey = 2", WriteMode.DeletionVector)
+    assert(t.liveFiles().map(_.fileType).toSet == Set("data", "posdel", "dv"))
+    // overlay files are read with their declared schemas: no inference job
+    val (df, jobs) = jobsDuring(t.scan())
+    assert(jobs == 0, s"scan() planning launched $jobs Spark job(s)")
+    assert(df.collect().map(_.getLong(0)).sorted.sameElements(Seq(3L, 4L, 5L, 6L)))
+  }
+
+  test("partitioned append writes exactly one data file per partition value") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp(), "k bigint, p bigint", Seq("p"))
+    // more partition values than write tasks: several values share a task
+    t.append((0L until 240L).map(k => (k, k % 12)).toDF("k", "p"))
+    val data = t.liveFiles().filter(_.fileType == "data")
+    assert(data.size == 12, s"expected 12 files, got ${data.map(_.partition)}")
+    assert(data.map(_.partition).distinct.size == 12)
+    assert(t.scan().count() == 240)
+  }
+
   test("rewrite_position_deletes merges tombstones, drops dead ones") {
     val t = mkOrders(tmp())
     t.append(seedDf(seed))
